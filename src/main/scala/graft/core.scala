@@ -52,6 +52,29 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.compression.codec", "snappy")
       .config("spark.ui.enabled", "false")
+      // Generated-class cache sized to the working set. Spark's default
+      // of 100 entries thrashes on repeated passes: a graph_dedup pass
+      // compiles ~171 distinct classes and a commerce_sql pass ~115, so
+      // under LRU eviction every class is evicted before its next use
+      // and each warm pass recompiled nearly all of them (perfbench
+      // graph_dedup on a 4-core VM: 168 of 171 classes, 2.1 s of a ~5 s
+      // warm pass). Reused classes also keep their HotSpot-compiled
+      // code, so warm tasks stop running freshly loaded code in the
+      // interpreter. Results are unaffected.
+      // The cache is JVM-global and CodeGenerator reads this static conf
+      // once, at the first codegen in the JVM. So the setting lives here,
+      // in the one factory every entry point and TestSpark share; a
+      // session built without it, or built after codegen has already run
+      // (DriverSim's bare session), keeps Spark's default of 100.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
+      // The cache keys on the generated source, and by default the class
+      // name embeds the whole-stage codegen stage id. Under AQE that id
+      // follows the order in which concurrent shuffle stages finish, so
+      // a re-run of one plan can renumber its stages and miss the cache
+      // with byte-identical code (dedup_pair_quality at sf0.01 on 4
+      // cores: 3–11 such recompiles per warm pass). Without the id,
+      // identical stages share one class, within a plan and across runs.
+      .config("spark.sql.codegen.useIdInClassName", "false")
 }
 
 /** Parallelism floor for degenerate scan inputs (optimization guide
@@ -148,28 +171,38 @@ object Tables {
   /** The one place a table name maps to its on-disk path. */
   def pathOf(dir: String, name: String): String = s"$dir/$name.parquet"
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = pathOf(dir, name)
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    parquet(spark, pathOf(dir, name))
+
+  /** Parquet scan of any path through [[schemaMemo]] — also for stored
+    * layouts, whose reads would otherwise fire the inference job on
+    * every construction.
+    */
+  private[graft] def parquet(spark: SparkSession, path: String): DataFrame = {
     val sch = schemaMemo.computeIfAbsent(
       (path, graft.sources.DerivedCache.sourceStamp(path)),
       _ => spark.read.parquet(path).schema)
     spark.read.schema(sch).parquet(path)
   }
 
-  private val countMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private val countMemo = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long), java.lang.Long]()
 
-  /** Table row count memoized per (dir, table) for the quadratic-anchor
-    * guards: the refusal check must not re-run a count job on every
-    * DataFrame CONSTRUCTION (plan-only callers — explain, spec plan
-    * asserts — were paying a full scan per build).
+  /** Table row count memoized per (path, source stamp) for the
+    * quadratic-anchor guards: the refusal check must not re-run a count
+    * job on every DataFrame CONSTRUCTION (plan-only callers — explain,
+    * spec plan asserts — were paying a full scan per build). Stamp-keyed
+    * like [[schemaMemo]]: the count decides exact-versus-sketch routing,
+    * so a regenerated source must be counted again.
     */
-  def cachedCount(spark: SparkSession, dir: String, name: String): Long =
+  def cachedCount(spark: SparkSession, dir: String, name: String): Long = {
+    val path = pathOf(dir, name)
     countMemo
       .computeIfAbsent(
-        s"$dir/$name",
+        (path, graft.sources.DerivedCache.sourceStamp(path)),
         _ => java.lang.Long.valueOf(table(spark, dir, name).count()))
       .longValue()
+  }
 
   def region(s: SparkSession, d: String)    = table(s, d, "region")
   def nation(s: SparkSession, d: String)    = table(s, d, "nation")
@@ -322,6 +355,15 @@ object Ckpt {
   private val applied = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[org.apache.spark.SparkContext, (String, String)])
 
+  /** Truncates `df`'s lineage. `eager = false` is NOT plan-only: both
+    * `Dataset.checkpoint(false)` and `localCheckpoint(false)` call
+    * `physicalPlan.execute()` at construction, and under AQE that
+    * materializes every shuffle stage of `df` (plus the range-sampling
+    * job of any global sort) before returning. Only the final result
+    * stage is deferred to the first consumer. A lazy cut therefore
+    * saves one stage, not the subtree's jobs; a frame with one consumer
+    * is cheaper uncut.
+    */
   def cut(df: DataFrame, eager: Boolean = true): DataFrame = {
     val spark = df.sparkSession
     val sc    = spark.sparkContext

@@ -1608,8 +1608,9 @@ object Cdc {
     // than checkpointing corpus-wide hash streams — but a bounded
     // micro-batch (streaming ingest) pays three delta scans + hash
     // passes PER BATCH for a frame that fits in one local block, so
-    // there the stream is cut once (lazy: the first consumer
-    // materializes it) and shared.
+    // there the stream is cut once and shared. The cut is lazy only in
+    // its final stage: any shuffle stage below it runs at construction
+    // under AQE (see Ckpt.cut).
     val dwin =
       if (deltaIsSmall) graft.Ckpt.cut(winDistinct(delta), eager = false)
       else winDistinct(delta)

@@ -682,7 +682,7 @@ object Dedup {
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$out/sigs")
     }
-    val sigs = spark.read.parquet(s"$d/sigs")
+    val sigs = Tables.parquet(spark, s"$d/sigs")
     (sigs, bandsOf(sigs))
   }
 
@@ -762,9 +762,7 @@ object Dedup {
   }
 
   /** The minhash candidate+verify kernel over an arbitrary (sigs,
-    * bands) pair — factored so bounded-sample callers (the above-cap
-    * pair-quality route) grade the REAL kernel over their sample
-    * instead of the full corpus.
+    * bands) pair, in presentation order.
     */
   private[operators] def dedupMinhashOf(sigs: DataFrame, bands: DataFrame): DataFrame =
     dedupMinhashOfUnordered(sigs, bands).orderBy(col("doc_a"), col("doc_b"))
@@ -841,14 +839,9 @@ object Dedup {
     */
   def dedupSimhash(spark: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(spark)
-    dedupSimhashOf(Tables.documents(spark, dir))
+    simhashHammingOf(Tables.documents(spark, dir), maxHam = 3)
+      .orderBy(col("doc_a"), col("doc_b"))
   }
-
-  /** The simhash kernel over an arbitrary (doc_id, text) frame — same
-    * factoring rationale as [[dedupMinhashOf]].
-    */
-  private[operators] def dedupSimhashOf(docsIn: DataFrame): DataFrame =
-    simhashHammingOf(docsIn, maxHam = 3).orderBy(col("doc_a"), col("doc_b"))
 
   /** Banded simhash candidates with Hamming ≤ maxHam — the shared
     * candidate+confirm stage of dedup_simhash (maxHam = 3, the shipped
@@ -2786,12 +2779,15 @@ object Dedup {
     val nDocs = Tables.cachedCount(spark, dir, "documents")
     val (docs, m) =
       sampleAboveCap("dedup_pair_quality", Tables.documents(spark, dir), nDocs, cap)
-    val (minhashPairs, simhashPairs) =
-      if (m == 1) (dedupMinhash(spark, dir), dedupSimhash(spark, dir))
+    // unordered kernels: each pair set only feeds a count, so the
+    // presentation sort would add nothing but a range-sampling job
+    val minhashPairs =
+      if (m == 1) dedupMinhashUnordered(spark, dir)
       else {
         val (sigs, bands) = minhashBandsOf(docs, MinhashK)
-        (dedupMinhashOf(sigs, bands), dedupSimhashOf(docs))
+        dedupMinhashOfUnordered(sigs, bands)
       }
+    val simhashPairs = simhashHammingOf(docs, maxHam = 3)
     // the exact anchor feeds three consumers (denominator + two
     // semi-joins) — the STORED anchor (build-once parquet) replaces the
     // former per-run inverted-index pass + checkpoint
@@ -2799,7 +2795,9 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"))
     val nExact = exact.agg(count(lit(1)).as("n_exact"))
     def grade(method: String, pairsIn: DataFrame): DataFrame = {
-      val p = pairsIn.select(col("doc_a"), col("doc_b")).cutLineage(eager = false)
+      // no lineage cut: p has one consumer, and even a lazy cut runs
+      // every shuffle stage at construction under AQE (see Ckpt.cut)
+      val p = pairsIn.select(col("doc_a"), col("doc_b"))
       // SHUFFLE_HASH pin, kept with the stored anchor: parquet stats
       // size the anchor correctly, but the LEFT side (p) is a
       // post-aggregate pair frame whose estimate undercounts a

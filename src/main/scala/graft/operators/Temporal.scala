@@ -213,9 +213,10 @@ object Temporal {
     */
   private[graft] def scoreHourly(counts0: DataFrame): DataFrame = {
     // every derived side below (span, types, the left join) reads this
-    // hours×types frame, not events — ONE data-sized scan total. Lazy:
-    // plan-only callers (explain, spec plan asserts) must not trigger
-    // the scan at DataFrame construction
+    // hours×types frame, not events — ONE data-sized scan total. The
+    // lazy cut defers only the final stage: under AQE the aggregate's
+    // shuffle stage (and so the events scan) still runs at DataFrame
+    // construction (see Ckpt.cut)
     val counts = counts0.cutLineage(eager = false)
     val span = counts.agg(min(col("hour")).as("h_lo"), max(col("hour")).as("h_hi"))
     val grid = span
